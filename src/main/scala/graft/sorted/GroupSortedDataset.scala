@@ -5,8 +5,9 @@ import java.nio.ByteBuffer
 import scala.reflect.ClassTag
 
 import org.apache.spark.SparkEnv
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.graftbridge.GroupSortBridge
 
 /**
  * A `Dataset[(K, V)]` carrying the *group-sorted layout invariant*:
@@ -24,36 +25,29 @@ import org.apache.spark.sql.functions.col
  * groups stream through [[iterators]] and are never materialized, so a key with
  * 100M rows costs O(1) heap, which is what makes this viable at 100 TB.
  *
+ * The two-input merges (the `mergeJoin` family and `mergeUnion`) are Catalyst
+ * cogroups keyed by the key column, so Catalyst plans them on the two layouts
+ * and compares keys with its own equality (NaN matches NaN, -0.0 matches 0.0).
+ *
  * By convention (inherited from the reference) the key is the FIRST column and
  * the value the LAST column of the tuple Dataset.
  *
- * KEY TYPE CONSTRAINT: key-run detection compares keys with JVM `==`, so key
- * types must have value-based equality consistent with their Catalyst sort
- * order — primitives, Strings, case classes, tuples. `Array[_]` keys
- * (reference equality) and `Double.NaN` keys (NaN != NaN) would silently
- * split one key's run into many; wrap such keys (e.g. `Seq` instead of
- * `Array`) before grouping. The reference has the same constraint.
+ * KEY TYPE CONSTRAINT (`mapStreamByKey` and the folds and scans built on it):
+ * key-run detection compares keys with JVM `==`, so key types must have
+ * value-based equality consistent with their Catalyst sort order —
+ * primitives, Strings, case classes, tuples. `Array[_]` keys (reference
+ * equality) and `Double.NaN` keys (NaN != NaN) would silently split one key's
+ * run into many; wrap such keys (e.g. `Seq` instead of `Array`) before
+ * grouping. The reference has the same constraint.
  */
 class GroupSortedDataset[K: Encoder, V] private[sorted] (
     dataset: Dataset[(K, V)],
-    valueSort: Option[Column] = None,
-    sourceOpt: Option[Dataset[(K, V)]] = None,
-    private[sorted] val explicitPartitions: Option[Int] = None,
-    private[sorted] val reverseLayout: Boolean = false) extends Serializable {
-  import GroupSortedDataset.tupleEnc
+    sortBy: Option[Column => Column],
+    private val reverse: Boolean) extends Serializable {
+  import GroupSortedDataset.{KeyColumn, ValueColumn, direction, tupleEnc}
 
   /** Escape hatch: the underlying Dataset, layout guaranteed. */
   def toDS: Dataset[(K, V)] = dataset
-
-  /** The pre-shuffle input when this instance came straight from `groupSort`.
-    * `mergeJoin` plans its own exchange+sort (`cogroupSorted`), so feeding it
-    * the already-laid-out dataset would shuffle and sort each side TWICE —
-    * Catalyst cannot see that the typed grouping key equals the repartition
-    * column through the lambda. After narrow ops this falls back to the
-    * laid-out dataset (still correct, cogroup re-establishes order itself). */
-  private[sorted] def source: Dataset[(K, V)] = sourceOpt.getOrElse(dataset)
-
-  private[sorted] def valueSortOrDefault: Column = valueSort.getOrElse(col(dataset.columns.last))
 
   /**
    * Stream `f` over each key's values (in the established value order), with a
@@ -85,175 +79,117 @@ class GroupSortedDataset[K: Encoder, V] private[sorted] (
     mapStreamByKey(vs => vs.scanLeft(freshZero())(f))
   }
 
-  /** Value projection. Narrow: grouping layout survives, per-key value ORDER is
-    * no longer meaningful under the new value type (so the value-sort column is
-    * dropped), but the key->partition mapping and key order are untouched — the
-    * co-partition proof (`explicitPartitions`) is carried so a later
-    * `mergeJoin`/`mergeUnion` still plans the 0-exchange narrow path, matching
-    * the reference's partitioner preservation (`GroupSorted.scala:33-39`). */
+  /** Value projection. The key column is kept as is, so the layout survives;
+    * per-key value ORDER is no longer meaningful under the new value type,
+    * so the value sort is dropped (reference `GroupSorted.scala:33-39`). */
   def mapValues[W: Encoder](f: V => W): GroupSortedDataset[K, W] =
-    new GroupSortedDataset(dataset.map(kv => (kv._1, f(kv._2)))(tupleEnc[K, W]), None, None, explicitPartitions, reverseLayout)
+    withValues(GroupSortBridge.typedUdf(f, implicitly[Encoder[W]], valueEncoder)(col(valueName)))
 
-  /** 1-to-N value expansion; narrow, grouping layout AND co-partition proof
-    * survive (key runs stay contiguous and in key order). */
-  def flatMapValues[W: Encoder](f: V => IterableOnce[W]): GroupSortedDataset[K, W] =
-    new GroupSortedDataset(dataset.flatMap(kv => f(kv._2).iterator.map(w => (kv._1, w)))(tupleEnc[K, W]), None, None, explicitPartitions, reverseLayout)
+  /** 1-to-N value expansion; key runs stay contiguous and in key order. A
+    * merge on the result re-sorts this side by key, with no new exchange. */
+  def flatMapValues[W: Encoder](f: V => IterableOnce[W]): GroupSortedDataset[K, W] = {
+    val expand = GroupSortBridge.typedUdf((v: V) => f(v).iterator.toSeq,
+      GroupSortBridge.seqEncoder(implicitly[Encoder[W]]), valueEncoder)
+    withValues(explode(expand(col(valueName))))
+  }
 
-  /** Value projection that can read the key; narrow, co-partition proof survives. */
-  def mapKeyValuesToValues[W: Encoder](f: ((K, V)) => W): GroupSortedDataset[K, W] =
-    new GroupSortedDataset(dataset.map(kv => (kv._1, f(kv)))(tupleEnc[K, W]), None, None, explicitPartitions, reverseLayout)
+  /** Value projection that can read the key; the layout survives. */
+  def mapKeyValuesToValues[W: Encoder](f: ((K, V)) => W): GroupSortedDataset[K, W] = {
+    val project = GroupSortBridge.typedUdf((k: K, v: V) => f((k, v)),
+      implicitly[Encoder[W]], implicitly[Encoder[K]], valueEncoder)
+    withValues(project(col(keyName), col(valueName)))
+  }
 
   /** Row filter; narrow, preserves BOTH grouping and per-key value order
     * (the sort metadata is carried so later mergeJoins keep the order too). */
   def filter(f: ((K, V)) => Boolean): GroupSortedDataset[K, V] =
-    new GroupSortedDataset(dataset.filter(f), valueSort, None, explicitPartitions, reverseLayout)
-
-  /** True when `this` and `other` PROVABLY share the same key->partition
-    * mapping: both laid out with the same EXPLICIT partition count over the
-    * same key hash (`repartition(n, key)` pins n — AQE does not coalesce
-    * user-numbered repartitions, while equal runtime counts of two implicit
-    * layouts prove nothing). */
-  private def coPartitioned[W](other: GroupSortedDataset[K, W]): Boolean =
-    (explicitPartitions, other.explicitPartitions) match {
-      case (Some(a), Some(b)) => a == b
-      case _ => false
-    }
-
-  /**
-   * Diagnostic: would `mergeJoin(other)` plan the NARROW 0-exchange path
-   * under the implicits in scope at the call site? The narrow path needs (a)
-   * a co-partition proof — both sides `groupSort(n)` with the same explicit
-   * `n`, carried through any narrow ops in between — and (b) a
-   * [[NarrowJoinSupport]] instance carrying an `Ordering[K]` (derived
-   * automatically whenever `K` has one in implicit scope; the low-priority
-   * fallback for unordered keys selects cogroup). Pin the plan with this
-   * method (or an Exchange-count plan assertion) where the narrow path is
-   * load-bearing.
-   */
-  def canNarrowJoinWith[W](other: GroupSortedDataset[K, W])(implicit nj: NarrowJoinSupport[K]): Boolean =
-    nj.keyOrdering.isDefined && coPartitioned(other)
+    new GroupSortedDataset(dataset.filter(f), sortBy, reverse)
 
   /**
    * Generalized sort-merge cogroup: for every key on either side, `f` sees both
-   * (possibly empty) value iterators and streams its output.
+   * (possibly empty) value iterators, each in its side's established value
+   * order, and streams its output.
    *
-   * When both sides are provably co-partitioned (equal EXPLICIT partition
-   * counts from `groupSort(n)`) and an `Ordering[K]` consistent with the
-   * layout's key sort is available, this is a NARROW `zipPartitions` 2-pointer
-   * merge over the already-established layouts — zero additional exchanges,
-   * the direct analog of the reference's co-partitioned plan
-   * (tresata/spark-sorted `GroupSorted.scala:63-72`). The merge kernel
-   * ([[iterators.mergeJoin]]) asserts key sortedness as it streams, so an
-   * `Ordering[K]` inconsistent with Catalyst's sort (exotic non-BMP strings)
-   * fails loud, not wrong.
-   *
-   * Otherwise it is planned via `KeyValueGroupedDataset.cogroupSorted` —
-   * Spark's native shuffle+sort-merge cogroup (one exchange + sort per side,
-   * planned from the PRE-layout `source` so nothing shuffles twice).
-   *
-   * CALL-SITE CAVEAT: the physical path is chosen by the
-   * [[NarrowJoinSupport]] typeclass — an ordered key resolves the narrow
-   * instance, an unordered key resolves the low-priority cogroup fallback
-   * (correct, but two exchanges), and `NarrowJoinSupport.cogroupOnly[K]` is
-   * the explicit opt-out. When the narrow plan is the point, assert
-   * [[canNarrowJoinWith]] or pin the plan's Exchange count in a test.
+   * With equal partition counts on both layouts the plan adds no exchange and
+   * no sort to theirs (the reference's narrow merge, `GroupSorted.scala:63-72`);
+   * with mismatched counts Catalyst re-shuffles one side.
    */
-  def mergeJoin[W, U](other: GroupSortedDataset[K, W])(f: (Iterator[V], Iterator[W]) => IterableOnce[U])(implicit encU: Encoder[U], nj: NarrowJoinSupport[K]): Dataset[(K, U)] = {
-    val enc = tupleEnc[K, U]
-    val narrowOrd = if (coPartitioned(other)) nj.keyOrdering else None
-    narrowOrd match {
-      case Some(ordK) =>
-        val spark = dataset.sparkSession
-        val merged = dataset.rdd.zipPartitions(other.toDS.rdd) { (l, r) =>
-          iterators.mergeJoin(l, r)(f)(ordK)
-        }
-        spark.createDataset(merged)(enc)
-      case None =>
-        val left = source
-        val right = other.source
-        // value = LAST column by the key-first/value-last convention; `.as[(K, V)]`
-        // keeps original column names, so don't assume "_2". Reuse the sort order
-        // groupSort established when it is known.
-        val leftSort = valueSortOrDefault
-        val rightSort = other.valueSortOrDefault
-        left
-          .groupByKey(_._1)
-          .cogroupSorted(right.groupByKey(_._1))(leftSort)(rightSort) { (k, vs, ws) =>
-            f(vs.map(_._2), ws.map(_._2)).iterator.map(u => (k, u))
-          }(enc)
-    }
-  }
+  def mergeJoin[W, U](other: GroupSortedDataset[K, W])(f: (Iterator[V], Iterator[W]) => IterableOnce[U])(implicit encU: Encoder[U]): Dataset[(K, U)] =
+    cogroup(other, other.reverse)(f)(tupleEnc[K, U])
 
   /** Full-outer merge join: per key, cross product of values with `None` for a
     * missing side. `bufferLeft` flips which side is buffered per key. */
-  def mergeJoinOuter[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(Option[V], Option[W])], nj: NarrowJoinSupport[K]): Dataset[(K, (Option[V], Option[W]))] = {
+  def mergeJoinOuter[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(Option[V], Option[W])]): Dataset[(K, (Option[V], Option[W]))] = {
     val f =
       if (bufferLeft) iterators.flipped(iterators.outerProduct[W, V])
       else iterators.outerProduct[V, W]
-    mergeJoin(other)(f)(e, nj)
+    mergeJoin(other)(f)
   }
 
   /** Inner merge join: only keys present on both sides. */
-  def mergeJoinInner[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(V, W)], nj: NarrowJoinSupport[K]): Dataset[(K, (V, W))] = {
+  def mergeJoinInner[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(V, W)]): Dataset[(K, (V, W))] = {
     val f =
       if (bufferLeft) iterators.flipped(iterators.innerProduct[W, V])
       else iterators.innerProduct[V, W]
-    mergeJoin(other)(f)(e, nj)
+    mergeJoin(other)(f)
   }
 
   /** Left-outer merge join. Right-only keys emit nothing outright (the
     * dedicated kernel never allocates the discarded tuples a filtered full
     * outer would). */
-  def mergeJoinLeftOuter[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(V, Option[W])], nj: NarrowJoinSupport[K]): Dataset[(K, (V, Option[W]))] =
-    mergeJoin(other)(iterators.leftOuterProduct[V, W](bufferLeft))(e, nj)
+  def mergeJoinLeftOuter[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(V, Option[W])]): Dataset[(K, (V, Option[W]))] =
+    mergeJoin(other)(iterators.leftOuterProduct[V, W](bufferLeft))
 
   /** Right-outer merge join (mirror of [[mergeJoinLeftOuter]]). */
-  def mergeJoinRightOuter[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(Option[V], W)], nj: NarrowJoinSupport[K]): Dataset[(K, (Option[V], W))] =
-    mergeJoin(other)(iterators.rightOuterProduct[V, W](bufferLeft))(e, nj)
+  def mergeJoinRightOuter[W](other: GroupSortedDataset[K, W], bufferLeft: Boolean = false)(implicit e: Encoder[(Option[V], W)]): Dataset[(K, (Option[V], W))] =
+    mergeJoin(other)(iterators.rightOuterProduct[V, W](bufferLeft))
 
   /**
-   * Order-preserving multiset union with another GroupSortedDataset laid out
-   * with a compatible sort. When partition counts match, this is a NARROW
-   * zip-partitions 2-way merge (no shuffle — the direct analog of the
-   * reference's `mergeUnion`, `GroupSorted.scala:100-103`); otherwise it falls
-   * back to `union` + re-establishing the layout (one shuffle).
+   * Order-preserving multiset union with another layout (the reference's
+   * `mergeUnion`, `GroupSorted.scala:100-103`): per key, the two value runs
+   * are merged under THIS layout's direction. Pass the natural `Ordering[V]`;
+   * a `reverse = true` layout merges under its reverse. Planned like
+   * [[mergeJoin]]; when `other` runs the other way, its runs are re-sorted.
    */
-  def mergeUnion(other: GroupSortedDataset[K, V])(implicit ordK: Ordering[K], ordV: Ordering[V]): GroupSortedDataset[K, V] = {
-    val left = dataset
-    val right = other.toDS
-    // Rows are laid out (key asc, value asc-or-desc): a `reverse = true`
-    // layout merges under the REVERSED value ordering — the caller passes the
-    // natural `Ordering[V]` either way (reference `GroupSorted.scala:100-103`
-    // parity; previously a descending layout assert-failed in the merge).
-    implicit val ordKV: Ordering[(K, V)] =
-      Ordering.Tuple2(ordK, if (reverseLayout) ordV.reverse else ordV)
-    // The narrow zip is only sound when both sides PROVABLY share the same
-    // key->partition mapping (same explicit partition count on the same key
-    // hash — equal runtime counts alone are not proof: AQE can coalesce the
-    // two sides' implicit repartitions differently, and zipping mismatched
-    // partitionings would silently split a key across merged partitions) AND
-    // the same value sort direction.
-    if (coPartitioned(other) && reverseLayout == other.reverseLayout &&
-        left.rdd.getNumPartitions == right.rdd.getNumPartitions) {
-      val spark = left.sparkSession
-      val merged = left.rdd.zipPartitions(right.rdd, preservesPartitioning = true)(iterators.mergeUnion(_, _))
-      // restore the ORIGINAL column names: createDataset re-materializes the
-      // encoder's tuple schema (_1/_2), and a named valueSort (col("score"))
-      // carried onto a _1/_2 frame would break the next cogroup/union resolve
-      val ds = spark.createDataset(merged)(dataset.encoder)
-        .toDF(dataset.columns: _*).as[(K, V)](dataset.encoder)
-      new GroupSortedDataset(ds, valueSort, None, explicitPartitions, reverseLayout)
-    } else {
-      // shuffle fallback: re-establish the layout PRESERVING this side's
-      // established value sort (both sides must share a compatible sort for
-      // mergeUnion to be meaningful at all)
-      val u = left.union(right)
-      val key = col(u.columns.head)
-      val sort = valueSortOrDefault
-      new GroupSortedDataset(
-        u.repartition(key).sortWithinPartitions(key, sort), Some(sort), None,
-        None, reverseLayout)
-    }
+  def mergeUnion(other: GroupSortedDataset[K, V])(implicit ordV: Ordering[V]): GroupSortedDataset[K, V] = {
+    val ord = if (reverse) ordV.reverse else ordV
+    val merged = cogroup(other, reverse)((vs, ws) => iterators.mergeUnion(vs, ws)(ord))(dataset.encoder)
+    // the carried value sort resolves by this side's column names
+    new GroupSortedDataset(merged.toDF(dataset.columns: _*).as[(K, V)](dataset.encoder), sortBy, reverse)
+  }
+
+  private def keyName: String = dataset.columns.head
+  private def valueName: String = dataset.columns.last
+  private def valueEncoder: Encoder[V] = GroupSortBridge.valueEncoder(dataset.encoder)
+
+  private def withValues[W: Encoder](value: Column): GroupSortedDataset[K, W] =
+    new GroupSortedDataset(dataset.select(col(keyName), value.as(valueName)).as[(K, W)](tupleEnc[K, W]), None, reverse)
+
+  /** The value sort a merge asks of this side, on `value`, in direction
+    * `descending`. Empty when this layout runs that way but a value
+    * projection dropped its sort: the rows keep the layout's order. */
+  private def valueOrder(value: Column, descending: Boolean): Seq[Column] =
+    if (descending == reverse) sortBy.map(s => direction(s(value), descending)).toSeq
+    else Seq(direction(sortBy.fold(value)(_(value)), descending))
+
+  /** Grouped by the key column under fixed column names: Catalyst's cogroup
+    * needs equal key schemas on both sides, and the renaming projection
+    * keeps the layout's partitioning and order visible. */
+  private def grouped: KeyValueGroupedDataset[Option[K], (K, V)] =
+    dataset.toDF(KeyColumn, ValueColumn).as[(K, V)](dataset.encoder)
+      .groupBy(col(KeyColumn))
+      .as[Option[K], (K, V)](GroupSortBridge.optionEncoder(implicitly[Encoder[K]]), dataset.encoder)
+
+  /** Both layouts cogrouped by key; the other side's runs arrive in
+    * direction `otherDescending`. */
+  private def cogroup[W, X](other: GroupSortedDataset[K, W], otherDescending: Boolean)(
+      f: (Iterator[V], Iterator[W]) => IterableOnce[X])(enc: Encoder[(K, X)]): Dataset[(K, X)] = {
+    val value = col(ValueColumn)
+    grouped.cogroupSorted(other.grouped)(valueOrder(value, reverse): _*)(
+        other.valueOrder(value, otherDescending): _*) { (key, vs, ws) =>
+      val k = key.getOrElse(null.asInstanceOf[K])
+      f(vs.map(_._2), ws.map(_._2)).iterator.map(x => (k, x))
+    }(enc)
   }
 }
 
@@ -261,45 +197,25 @@ object GroupSortedDataset {
   private[sorted] def tupleEnc[A: Encoder, B: Encoder]: Encoder[(A, B)] =
     Encoders.tuple(implicitly[Encoder[A]], implicitly[Encoder[B]])
 
-  /**
-   * Establish the group-sorted layout: hash-partition by the first column,
-   * sort within partitions by (key, sortBy(lastColumn)). `numPartitions <= 0`
-   * defers to `spark.sql.shuffle.partitions` (and AQE coalescing).
-   */
-  private[sorted] def apply[K: Encoder, V](dataset: Dataset[(K, V)], numPartitions: Option[Int], reverse: Boolean, sortBy: Column => Column): GroupSortedDataset[K, V] = {
-    val key = col(dataset.columns.head)
-    val valueSort = {
-      val s = sortBy(col(dataset.columns.last))
-      if (reverse) s.desc else s.asc
-    }
-    val repartitioned = numPartitions match {
-      case Some(n) if n > 0 => dataset.repartition(n, key)
-      case _ => dataset.repartition(key)
-    }
-    new GroupSortedDataset(repartitioned.sortWithinPartitions(key, valueSort), Some(valueSort), Some(dataset),
-      numPartitions.filter(_ > 0), reverse)
-  }
+  /** Column names the merges cogroup under. */
+  private val KeyColumn = "key"
+  private val ValueColumn = "value"
+
+  private def direction(sort: Column, descending: Boolean): Column = if (descending) sort.desc else sort.asc
 
   /**
-   * Establish a RANGE-partitioned group-sorted layout (see
-   * `syntax.groupSortByRange`): keys are range-partitioned so partitions
-   * concatenate globally key-ordered, then sorted within partitions by
-   * (key, valueSort) as usual. `explicitPartitions` stays `None` — range
-   * bounds are sample-dependent, so no co-partition proof exists and joins
-   * from this layout always plan the cogroup path.
+   * Establish the group-sorted layout: `partition` places rows by the first
+   * column (by hash or by range), then rows are sorted within partitions by
+   * (key, sortBy(lastColumn)). The key column is first put in the canonical
+   * form of `K` (see `GroupSortBridge.conformKey`), so any two layouts of the
+   * same key type can be merged.
    */
-  private[sorted] def byRange[K: Encoder, V](dataset: Dataset[(K, V)], numPartitions: Option[Int], reverse: Boolean, sortBy: Column => Column): GroupSortedDataset[K, V] = {
-    val key = col(dataset.columns.head)
-    val valueSort = {
-      val s = sortBy(col(dataset.columns.last))
-      if (reverse) s.desc else s.asc
-    }
-    val repartitioned = numPartitions match {
-      case Some(n) if n > 0 => dataset.repartitionByRange(n, key.asc)
-      case _ => dataset.repartitionByRange(key.asc)
-    }
-    new GroupSortedDataset(repartitioned.sortWithinPartitions(key, valueSort), Some(valueSort), Some(dataset),
-      None, reverse)
+  private[sorted] def apply[K: Encoder, V](dataset: Dataset[(K, V)], reverse: Boolean, sortBy: Column => Column)(
+      partition: (Dataset[(K, V)], Column) => Dataset[(K, V)]): GroupSortedDataset[K, V] = {
+    val keyed = GroupSortBridge.conformKey(dataset)
+    val key = col(keyed.columns.head)
+    val valueSort = direction(sortBy(col(keyed.columns.last)), reverse)
+    new GroupSortedDataset(partition(keyed, key).sortWithinPartitions(key, valueSort), Some(sortBy), reverse)
   }
 
   /**

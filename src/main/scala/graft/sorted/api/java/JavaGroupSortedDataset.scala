@@ -8,7 +8,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.api.java.function.{FlatMapFunction => JFlatMapFunction, Function => JFunction, Function0 => JFunction0, Function2 => JFunction2}
 import org.apache.spark.sql.{Dataset, Encoder}
 
-import graft.sorted.{GroupSortedDataset, NarrowJoinSupport}
+import graft.sorted.GroupSortedDataset
 import graft.sorted.syntax._
 
 /**
@@ -48,8 +48,7 @@ object JavaGroupSortedDataset {
   def groupSort[K, V](ds: Dataset[(K, V)], keyEncoder: Encoder[K]): JavaGroupSortedDataset[K, V] =
     groupSort(ds, -1, reverse = false, keyEncoder)
 
-  /** Establish the layout over `numPartitions` explicit partitions (carries
-    * the co-partition proof the narrow `mergeJoin`/`mergeUnion` paths need). */
+  /** Establish the layout over `numPartitions` explicit partitions. */
   def groupSort[K, V](ds: Dataset[(K, V)], numPartitions: Int, keyEncoder: Encoder[K]): JavaGroupSortedDataset[K, V] =
     groupSort(ds, numPartitions, reverse = false, keyEncoder)
 
@@ -58,8 +57,7 @@ object JavaGroupSortedDataset {
     new JavaGroupSortedDataset(ds.groupSort(numPartitions, reverse)(keyEncoder), keyEncoder)
 
   /** Range-partitioned layout (see `syntax.groupSortByRange`): partitions
-    * concatenate globally key-ordered; no co-partition proof is carried, so
-    * joins from this layout plan the cogroup path. */
+    * concatenate globally key-ordered. */
   def groupSortByRange[K, V](ds: Dataset[(K, V)], numPartitions: Int, reverse: Boolean, keyEncoder: Encoder[K]): JavaGroupSortedDataset[K, V] =
     new JavaGroupSortedDataset(ds.groupSortByRange(numPartitions, reverse)(keyEncoder), keyEncoder)
 
@@ -79,7 +77,7 @@ class JavaGroupSortedDataset[K, V] private (
   /** The laid-out `Dataset<Tuple2<K, V>>`. */
   def toDS(): Dataset[(K, V)] = underlying.toDS
 
-  /** Value projection; layout + co-partition proof survive
+  /** Value projection; the layout survives
     * (reference `api/java/GroupSorted.scala:58-61`). */
   def mapValues[W](f: JFunction[V, W], valueEncoder: Encoder[W]): JavaGroupSortedDataset[K, W] =
     new JavaGroupSortedDataset(underlying.mapValues(v => f.call(v))(valueEncoder), keyEncoder)
@@ -119,25 +117,17 @@ class JavaGroupSortedDataset[K, V] private (
   def scanLeftByKey[W](zero: W, f: JFunction2[W, V, W], valueEncoder: Encoder[W]): Dataset[(K, W)] =
     underlying.scanLeftByKey(zero)((w, v) => f.call(w, v))(fakeClassTag[W], valueEncoder)
 
-  /** Would `mergeJoin(other, ..., keyComparator, ...)` take the narrow
-    * 0-exchange path? See [[graft.sorted.GroupSortedDataset.canNarrowJoinWith]]. */
-  def canNarrowJoinWith[W](other: JavaGroupSortedDataset[K, W], keyComparator: Comparator[K]): Boolean =
-    underlying.canNarrowJoinWith(other.underlying)(NarrowJoinSupport.narrow(toOrdering(keyComparator)))
-
   /**
    * Generalized sort-merge cogroup: `f` sees both sides' value iterators per
-   * key (either may be empty) and streams the joined output. With a
-   * co-partition proof on both sides and a `keyComparator` consistent with
-   * the layout's key sort this is the NARROW 0-exchange merge. The typed
+   * key (either may be empty) and streams the joined output. The typed
    * inner/outer variants below are the same kernels with the tuple shape
    * fixed — use them when the join kind is known.
    */
   def mergeJoin[W, U](
       other: JavaGroupSortedDataset[K, W],
       f: JFunction2[JIterator[V], JIterator[W], JIterator[U]],
-      keyComparator: Comparator[K],
       resultEncoder: Encoder[U]): Dataset[(K, U)] =
-    underlying.mergeJoin(other.underlying)((vs, ws) => f.call(vs.asJava, ws.asJava).asScala)(resultEncoder, NarrowJoinSupport.narrow(toOrdering(keyComparator)))
+    underlying.mergeJoin(other.underlying)((vs, ws) => f.call(vs.asJava, ws.asJava).asScala)(resultEncoder)
 
   /**
    * Inner merge join: only keys present on both sides, per-key cross
@@ -148,9 +138,8 @@ class JavaGroupSortedDataset[K, V] private (
    */
   def mergeJoinInner[W](
       other: JavaGroupSortedDataset[K, W],
-      keyComparator: Comparator[K],
       resultEncoder: Encoder[(V, W)]): Dataset[(K, (V, W))] =
-    mergeJoinInner(other, false, keyComparator, resultEncoder)
+    mergeJoinInner(other, false, resultEncoder)
 
   /** `bufferLeft` overload — the reference exposes the buffered-side swap
     * knob on EVERY join kind (`GroupSorted.scala:81`), so the Java facade
@@ -159,9 +148,8 @@ class JavaGroupSortedDataset[K, V] private (
   def mergeJoinInner[W](
       other: JavaGroupSortedDataset[K, W],
       bufferLeft: Boolean,
-      keyComparator: Comparator[K],
       resultEncoder: Encoder[(V, W)]): Dataset[(K, (V, W))] =
-    underlying.mergeJoinInner(other.underlying, bufferLeft)(resultEncoder, NarrowJoinSupport.narrow(toOrdering(keyComparator)))
+    underlying.mergeJoinInner(other.underlying, bufferLeft)(resultEncoder)
 
   /**
    * Left-outer merge join. Java has no `scala.Option`, so the missing side
@@ -174,45 +162,41 @@ class JavaGroupSortedDataset[K, V] private (
    */
   def mergeJoinLeftOuter[W](
       other: JavaGroupSortedDataset[K, W],
-      keyComparator: Comparator[K],
       vEncoder: Encoder[V],
       wEncoder: Encoder[W]): Dataset[(K, (V, W))] =
-    mergeJoinLeftOuter(other, false, keyComparator, vEncoder, wEncoder)
+    mergeJoinLeftOuter(other, false, vEncoder, wEncoder)
 
   /** `bufferLeft` overload (reference parity — see [[mergeJoinInner]]'s
-    * 4-arg form): the dedicated kernel takes the swap flag directly. */
+    * 3-arg form): the dedicated kernel takes the swap flag directly. */
   def mergeJoinLeftOuter[W](
       other: JavaGroupSortedDataset[K, W],
       bufferLeft: Boolean,
-      keyComparator: Comparator[K],
       vEncoder: Encoder[V],
       wEncoder: Encoder[W]): Dataset[(K, (V, W))] =
     underlying.mergeJoin(other.underlying) { (vs, ws) =>
       graft.sorted.iterators.leftOuterProduct[V, W](bufferLeft)(vs, ws).iterator
         .map { case (v, wo) => (v, wo.getOrElse(null.asInstanceOf[W])) }
-    }(org.apache.spark.sql.Encoders.tuple(vEncoder, wEncoder), NarrowJoinSupport.narrow(toOrdering(keyComparator)))
+    }(org.apache.spark.sql.Encoders.tuple(vEncoder, wEncoder))
 
   /** Right-outer merge join (mirror of [[mergeJoinLeftOuter]]: NULL V slot
     * for unmatched right values). */
   def mergeJoinRightOuter[W](
       other: JavaGroupSortedDataset[K, W],
-      keyComparator: Comparator[K],
       vEncoder: Encoder[V],
       wEncoder: Encoder[W]): Dataset[(K, (V, W))] =
-    mergeJoinRightOuter(other, false, keyComparator, vEncoder, wEncoder)
+    mergeJoinRightOuter(other, false, vEncoder, wEncoder)
 
   /** `bufferLeft` overload (reference parity — see [[mergeJoinInner]]'s
-    * 4-arg form). */
+    * 3-arg form). */
   def mergeJoinRightOuter[W](
       other: JavaGroupSortedDataset[K, W],
       bufferLeft: Boolean,
-      keyComparator: Comparator[K],
       vEncoder: Encoder[V],
       wEncoder: Encoder[W]): Dataset[(K, (V, W))] =
     underlying.mergeJoin(other.underlying) { (vs, ws) =>
       graft.sorted.iterators.rightOuterProduct[V, W](bufferLeft)(vs, ws).iterator
         .map { case (vo, w) => (vo.getOrElse(null.asInstanceOf[V]), w) }
-    }(org.apache.spark.sql.Encoders.tuple(vEncoder, wEncoder), NarrowJoinSupport.narrow(toOrdering(keyComparator)))
+    }(org.apache.spark.sql.Encoders.tuple(vEncoder, wEncoder))
 
   /**
    * Full-outer merge join: every key from either side, NULL in the missing
@@ -222,7 +206,6 @@ class JavaGroupSortedDataset[K, V] private (
   def mergeJoinOuter[W](
       other: JavaGroupSortedDataset[K, W],
       bufferLeft: Boolean,
-      keyComparator: Comparator[K],
       vEncoder: Encoder[V],
       wEncoder: Encoder[W]): Dataset[(K, (V, W))] = {
     val kernel =
@@ -232,16 +215,15 @@ class JavaGroupSortedDataset[K, V] private (
       kernel(vs, ws).iterator.map { case (vo, wo) =>
         (vo.getOrElse(null.asInstanceOf[V]), wo.getOrElse(null.asInstanceOf[W]))
       }
-    }(org.apache.spark.sql.Encoders.tuple(vEncoder, wEncoder), NarrowJoinSupport.narrow(toOrdering(keyComparator)))
+    }(org.apache.spark.sql.Encoders.tuple(vEncoder, wEncoder))
   }
 
-  /** Order-preserving multiset union; narrow 2-way merge when co-partitioned
-    * with the same layout direction, shuffle re-layout otherwise. */
+  /** Order-preserving multiset union under this layout's value direction;
+    * `valueComparator` is the natural value order either way. */
   def mergeUnion(
       other: JavaGroupSortedDataset[K, V],
-      keyComparator: Comparator[K],
       valueComparator: Comparator[V]): JavaGroupSortedDataset[K, V] =
     new JavaGroupSortedDataset(
-      underlying.mergeUnion(other.underlying)(toOrdering(keyComparator), toOrdering(valueComparator)),
+      underlying.mergeUnion(other.underlying)(toOrdering(valueComparator)),
       keyEncoder)
 }

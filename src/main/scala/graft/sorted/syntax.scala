@@ -24,7 +24,9 @@ object syntax {
      * @param sortBy        value sort expression, given the value column
      */
     def groupSort(numPartitions: Int = -1, reverse: Boolean = false, sortBy: Column => Column = identity)(implicit ek: Encoder[K]): GroupSortedDataset[K, V] =
-      GroupSortedDataset(self, if (numPartitions > 0) Some(numPartitions) else None, reverse, sortBy)
+      GroupSortedDataset(self, reverse, sortBy) { (ds, key) =>
+        if (numPartitions > 0) ds.repartition(numPartitions, key) else ds.repartition(key)
+      }
 
     /**
      * Range-partitioned groupSort — the rebuild of the reference's custom-
@@ -33,21 +35,20 @@ object syntax {
      * are RANGE-partitioned: partition i holds a contiguous key interval, so
      * the concatenation of partitions in index order is GLOBALLY key-sorted —
      * the layout for sorted sinks and range-pruned scans. Range bounds come
-     * from `repartitionByRange`'s reservoir sample, so two range layouts are
-     * never provably aligned: no co-partition proof is carried, and a later
-     * `mergeJoin`/`mergeUnion` against ANY layout correctly plans the
-     * shuffle-cogroup path.
+     * from `repartitionByRange`'s reservoir sample, so a range layout never
+     * matches another layout's partitioning: a later `mergeJoin`/`mergeUnion`
+     * re-shuffles by key hash.
      */
     def groupSortByRange(numPartitions: Int = -1, reverse: Boolean = false, sortBy: Column => Column = identity)(implicit ek: Encoder[K]): GroupSortedDataset[K, V] =
-      GroupSortedDataset.byRange(self, if (numPartitions > 0) Some(numPartitions) else None, reverse, sortBy)
+      GroupSortedDataset(self, reverse, sortBy) { (ds, key) =>
+        if (numPartitions > 0) ds.repartitionByRange(numPartitions, key.asc) else ds.repartitionByRange(key.asc)
+      }
 
-    /** Co-layout with `other` (reference overload #8): same partition count.
-      * When `other` carries an EXPLICIT count, adopt it so BOTH sides hold the
-      * co-partition proof and `mergeJoin`/`mergeUnion` plan the 0-exchange
-      * narrow path; otherwise fall back to the runtime count (layout matches
-      * but neither side can prove it, so joins use the cogroup path). */
+    /** Co-layout with `other` (reference overload #8): the partition count of
+      * `other`'s planned layout, so a merge of the two adds no exchange.
+      * Reading the plan runs no job. */
     def groupSortWith[W](other: GroupSortedDataset[K, W])(implicit ek: Encoder[K]): GroupSortedDataset[K, V] =
-      groupSort(other.explicitPartitions.getOrElse(other.toDS.rdd.getNumPartitions))
+      groupSort(other.toDS.queryExecution.sparkPlan.outputPartitioning.numPartitions)
 
     /**
      * Combiner-style aggregation (reference overloads #9-#11,

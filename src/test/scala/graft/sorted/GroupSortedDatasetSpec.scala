@@ -1,5 +1,10 @@
 package graft.sorted
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, lit, pmod, struct, when}
 import org.scalatest.funspec.AnyFunSpec
 
 import graft.SparkSuite
@@ -13,6 +18,12 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
   import spark.implicits._
 
   private val fiveRows = Seq(("a", 1), ("b", 10), ("a", 3), ("b", 1), ("c", 5))
+
+  /** (Exchange count, Sort count) over the whole executed plan. */
+  private def planShape(ds: Dataset[_]): (Int, Int) = {
+    val plan = ds.queryExecution.executedPlan.toString
+    ("Exchange".r.findAllIn(plan).length, "Sort ".r.findAllIn(plan).length)
+  }
 
   describe("groupSort") {
     it("establishes the layout invariant (with value sort)") {
@@ -83,20 +94,11 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
     it("carries no co-partition proof: joins from a range layout take the cogroup path") {
       val l = Seq((1L, "x"), (2L, "y")).toDS.groupSortByRange(2)
       val r = Seq((1L, 10L), (3L, 30L)).toDS.groupSort(2)
-      assert(!l.canNarrowJoinWith(r) && !r.canNarrowJoinWith(l))
       val got = l.mergeJoinOuter(r)
-      // plan pin (the range↔hash analog of the narrow-merge parity test): the
-      // fallback must be the SQL cogroup — a CoGroup node fed by sorted
-      // exchanges — while a provable same-layout join plans NO CoGroup (it
-      // zips partitions in RDD land, surfacing as an ExternalRDD scan)
-      val mixedPlan = got.queryExecution.executedPlan.toString
-      assert(mixedPlan.contains("CoGroup"),
-        s"mixed range/hash layouts must take the cogroup path:\n$mixedPlan")
-      val narrowPlan = Seq((1L, "x")).toDS.groupSort(2)
-        .mergeJoinOuter(Seq((1L, 10L)).toDS.groupSort(2))
-        .queryExecution.executedPlan.toString
-      assert(!narrowPlan.contains("CoGroup") && narrowPlan.contains("Scan[obj"),
-        s"co-partitioned same-layout join must zip narrow (an object scan over the zipped RDD):\n$narrowPlan")
+      // a range layout never matches a hash layout's partitioning: Catalyst
+      // adds one exchange and one sort above the two layouts' own
+      assert(planShape(got) === ((3, 3)))
+      assert(got.queryExecution.executedPlan.toString.contains("CoGroup"))
       assertMultiset(got, Seq(
         (1L, (Some("x"), Some(10L))), (2L, (Some("y"), None)), (3L, (None, Some(30L)))))
     }
@@ -261,28 +263,40 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
       val l = Seq((1L, "a"), (2L, "b")).toDS.groupSort(2)
       val r = Seq((1L, 10L), (2L, 20L)).toDS.groupSort(2)
       val joined = l.mergeJoinInner(r)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(plan).isEmpty, plan) // zipPartitions over the layouts
+      // the whole plan holds the two layouts' exchanges and sorts, the join none of its own
+      assert(planShape(joined) === ((2, 2)))
       assertMultiset(joined, Seq((1L, ("a", 10L)), (2L, ("b", 20L))))
     }
 
-    it("non-co-partitioned sides plan ONE exchange and ONE sort per side (no double shuffle)") {
+    it("implicit partition counts: also one exchange and one sort per layout") {
+      val joined = Seq((1L, "a")).toDS.groupSort().mergeJoinInner(Seq((1L, 10L)).toDS.groupSort())
+      assert(planShape(joined) === ((2, 2)))
+      assertMultiset(joined, Seq((1L, ("a", 10L))))
+    }
+
+    it("mismatched partition counts: Catalyst re-shuffles and re-sorts ONE side") {
       val l = Seq((1L, "a"), (2L, "b")).toDS.groupSort(2)
-      val r = Seq((1L, 10L), (2L, 20L)).toDS.groupSort(3) // counts differ: no co-partition proof
-      val plan = l.mergeJoinInner(r).queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(plan).length === 2, plan)
-      assert("Sort ".r.findAllIn(plan).length === 2, plan)
+      val r = Seq((1L, 10L), (2L, 20L)).toDS.groupSort(3)
+      assert(planShape(l.mergeJoinInner(r)) === ((3, 3)))
     }
 
     it("keys without an Ordering still join co-partitioned (cogroup fallback, 2 exchanges)") {
-      // TimeValue is a case class with no implicit Ordering: even with equal
-      // explicit partition counts the narrow path cannot prove key order, so
-      // the join must fall back to cogroupSorted rather than zip blind
       val l = Seq((TimeValue(1, 1.0), "a"), (TimeValue(2, 2.0), "b")).toDS.groupSort(2)
       val r = Seq((TimeValue(1, 1.0), 9L)).toDS.groupSort(2)
       val joined = l.mergeJoinInner(r)
-      assert("Exchange".r.findAllIn(joined.queryExecution.executedPlan.toString).length === 2)
+      assert(planShape(joined) === ((2, 2)))
       assertMultiset(joined, Seq((TimeValue(1, 1.0), ("a", 9L))))
+    }
+
+    it("Double keys: NaN joins as one key and -0.0 joins 0.0, whatever the partition counts") {
+      val l = Seq((Double.NaN, 1), (0.0, 2), (1.0, 3), (Double.NaN, 4))
+      val r = Seq((Double.NaN, 10), (-0.0, 20), (2.0, 30))
+      // compared as strings: a tuple holding NaN never equals itself
+      val want = Seq((0.0, (2, 20)), (Double.NaN, (1, 10)), (Double.NaN, (4, 10))).map(_.toString).sorted
+      for (n <- Seq(2, 3)) {
+        val got = l.toDS().groupSort(2).mergeJoinInner(r.toDS().groupSort(n)).collect().map(_.toString).sorted
+        assert(got.toSeq === want, s"groupSort(2) x groupSort($n)")
+      }
     }
 
     it("narrow join agrees with the cogroup plan on outer/inner semantics") {
@@ -299,57 +313,137 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
   }
 
   describe("co-partition proof survives value-projection ops") {
+    // the key column passes through each projection untouched, so Catalyst
+    // still sees the layout: the plans below hold the two layouts' own
+    // exchange and sort, and the join none of its own
     it("groupSort(8).mapValues(f).mergeJoin(other.groupSort(8)) plans 0 exchanges") {
       val l = Seq((1L, 1), (2L, 2)).toDS.groupSort(8).mapValues(_ * 10)
       val r = Seq((1L, "x"), (3L, "z")).toDS.groupSort(8)
       val joined = l.mergeJoinInner(r)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(plan).isEmpty, plan)
+      assert(planShape(joined) === ((2, 2)))
       assertMultiset(joined, Seq((1L, (10, "x"))))
+    }
+
+    it("filter keeps the layout too: one exchange and one sort per layout") {
+      val l = Seq((1L, 1), (1L, 5), (2L, 2)).toDS.groupSort(4).filter(_._2 > 1)
+      val r = Seq((1L, "x"), (2L, "y")).toDS.groupSort(4)
+      val joined = l.mergeJoinInner(r)
+      assert(planShape(joined) === ((2, 2)))
+      assertMultiset(joined, Seq((1L, (5, "x")), (2L, (2, "y"))))
     }
 
     it("flatMapValues and mapKeyValuesToValues also keep the proof (0-exchange joins)") {
       val base = Seq((1L, 2), (2L, 1)).toDS.groupSort(4)
       val r = Seq((1L, "x"), (2L, "y")).toDS.groupSort(4)
+      // a generator loses the key order, not the partitioning: one extra sort
       val viaFlat = base.flatMapValues(v => Seq.fill(v)(v)).mergeJoinInner(r)
-      assert("Exchange".r.findAllIn(viaFlat.queryExecution.executedPlan.toString).isEmpty)
+      assert(planShape(viaFlat)._1 === 2)
       assertMultiset(viaFlat, Seq((1L, (2, "x")), (1L, (2, "x")), (2L, (1, "y"))))
       val viaKv = base.mapKeyValuesToValues { case (k, v) => k + v }.mergeJoinInner(r)
-      assert("Exchange".r.findAllIn(viaKv.queryExecution.executedPlan.toString).isEmpty)
+      assert(planShape(viaKv) === ((2, 2)))
       assertMultiset(viaKv, Seq((1L, (3L, "x")), (2L, (3L, "y"))))
     }
 
-    it("mapValues between a DESCENDING layout and mergeUnion still zips narrow") {
+    it("mapValues between a DESCENDING layout and mergeUnion keeps the layout") {
       val a = Seq(("k", 1), ("k", 3)).toDS().groupSort(2, reverse = true).mapValues(_ * 2)
       val b = Seq(("k", 4)).toDS().groupSort(2, reverse = true)
       val merged = a.mergeUnion(b)
-      assert("Exchange".r.findAllIn(merged.toDS.queryExecution.executedPlan.toString).isEmpty)
+      assert(planShape(merged.toDS) === ((2, 2)))
       val vs = merged.mapStreamByKey(it => Iterator.single(it.mkString(","))).collect().toMap
       assert(vs("k") === "6,4,2")
     }
 
     it("groupSortWith adopts the other side's EXPLICIT count so the join is narrow") {
-      val r = Seq((1L, 10L), (2L, 20L)).toDS.groupSort(8)
-      val l = Seq((1L, "a"), (2L, "b")).toDS.groupSortWith(r)
-      val joined = l.mergeJoinInner(r)
-      assert("Exchange".r.findAllIn(joined.queryExecution.executedPlan.toString).isEmpty)
-      assertMultiset(joined, Seq((1L, ("a", 10L)), (2L, ("b", 20L))))
+      // an implicit count is adopted as well, read from the planned layout
+      for (n <- Seq(8, -1)) {
+        val r = Seq((1L, 10L), (2L, 20L)).toDS.groupSort(n)
+        val l = Seq((1L, "a"), (2L, "b")).toDS.groupSortWith(r)
+        val joined = l.mergeJoinInner(r)
+        assert(planShape(joined) === ((2, 2)), s"groupSort($n)")
+        assertMultiset(joined, Seq((1L, ("a", 10L)), (2L, ("b", 20L))))
+      }
+    }
+  }
+
+  describe("key schema") {
+    // pmod is nullable and range ids are not, so the two sides' key columns
+    // differ in nullability until the layout gives both the encoder's form
+    def nullableKeys = spark.range(6).select(pmod(col("id"), lit(3L)).as("k"), col("id").as("v")).as[(Long, Long)]
+    def plainKeys = spark.range(3).select(col("id").as("k"), (col("id") * 10).as("v")).as[(Long, Long)]
+    val nullableRows = (0L until 6L).map(i => (i % 3, i))
+    val plainRows = (0L until 3L).map(i => (i, i * 10))
+
+    // nested fields from pmod are nullable; TimeValue's are primitives
+    def tv(c: org.apache.spark.sql.Column) = struct(c.cast("int").as("time"), c.cast("double").as("value"))
+    def nullableTv = spark.range(6).select(tv(pmod(col("id"), lit(3L))).as("k"), col("id").as("v"))
+      .as[(TimeValue, Long)]
+    def plainTv = spark.range(3).select(tv(col("id")).as("k"), (col("id") * 10).as("v")).as[(TimeValue, Long)]
+    def asTv(rows: Seq[(Long, Long)]) = rows.map { case (k, v) => (TimeValue(k.toInt, k.toDouble), v) }
+
+    it("primitive keys: a nullable-key side joins and unions with a non-nullable one") {
+      val joined = nullableKeys.groupSort(2).mergeJoinInner(plainKeys.groupSort(2))
+      assert(planShape(joined) === ((2, 2)))
+      assertMultiset(joined, nullableRows.map { case (k, v) => (k, (v, k * 10)) })
+      val union = nullableKeys.groupSort(2).mergeUnion(plainKeys.groupSort(2))
+      assert(planShape(union.toDS) === ((2, 2)))
+      assertMultiset(union.toDS, nullableRows ++ plainRows)
     }
 
-    it("canNarrowJoinWith reports the planned path (proof + Ordering both required)") {
-      val a = Seq((1L, "x")).toDS.groupSort(4)
-      val b = Seq((1L, 1L)).toDS.groupSort(4)
-      val c = Seq((1L, 1L)).toDS.groupSort(5)
-      assert(a.canNarrowJoinWith(b))           // same explicit count + Ordering[Long]
-      assert(!a.canNarrowJoinWith(c))          // counts differ: no proof
-      assert(a.mapValues(_.length).canNarrowJoinWith(b)) // proof survives projection
-      // no Ordering[TimeValue] in scope -> the low-priority NarrowJoinSupport
-      // fallback resolves -> cogroup path
-      val t1 = Seq((TimeValue(1, 1.0), "a")).toDS.groupSort(4)
-      val t2 = Seq((TimeValue(1, 1.0), 2L)).toDS.groupSort(4)
-      assert(!t1.canNarrowJoinWith(t2))
-      // explicit opt-out forces the cogroup path even for an ordered key
-      assert(!a.canNarrowJoinWith(b)(NarrowJoinSupport.cogroupOnly))
+    it("struct keys: a nullable-key side joins and unions with a non-nullable one") {
+      val joined = nullableTv.groupSort(2).mergeJoinInner(plainTv.groupSort(2))
+      assert(planShape(joined) === ((2, 2)))
+      assertMultiset(joined, asTv(nullableRows).map { case (k, v) => (k, (v, k.time * 10L)) })
+      val union = nullableTv.groupSort(2).mergeUnion(asTv(plainRows).toDS.groupSort(2))
+      assertMultiset(union.toDS, asTv(nullableRows ++ plainRows))
+    }
+
+    it("a mergeUnion output joins a fresh layout, for primitive and struct keys") {
+      val union = nullableKeys.groupSort(2).mergeUnion(plainKeys.groupSort(2))
+      assertMultiset(union.mergeJoinInner(plainKeys.groupSort(2)),
+        (nullableRows ++ plainRows).map { case (k, v) => (k, (v, k * 10)) })
+      val tvUnion = nullableTv.groupSort(2).mergeUnion(plainTv.groupSort(2))
+      assertMultiset(tvUnion.mergeJoinInner(plainTv.groupSort(2)),
+        asTv(nullableRows ++ plainRows).map { case (k, v) => (k, (v, k.time * 10L)) })
+    }
+
+    it("a null under a primitive key type fails loudly instead of reading as 0") {
+      val withNull = spark.range(3)
+        .select(when(col("id") === 0L, lit(null)).otherwise(col("id")).as("k"), col("id").as("v"))
+        .as[(Long, Long)]
+      val e = intercept[RuntimeException](withNull.groupSort(2).mergeJoinInner(plainKeys.groupSort(2)).collect())
+      assert(e.getMessage.contains("key column `k` of a group-sorted layout"), e.getMessage)
+    }
+  }
+
+  describe("building a merge") {
+    it("starts no Spark job: the plan is built, nothing runs until an action") {
+      val sc = spark.sparkContext
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      def building(group: String)(build: => Any): Unit = {
+        sc.setJobGroup(group, group)
+        try build finally sc.clearJobGroup()
+      }
+      sc.addSparkListener(listener)
+      try {
+        val l = Seq((1L, "a"), (2L, "b")).toDS.groupSort(4)
+        val r = Seq((1L, 10L)).toDS.groupSort(4)
+        building("mergeJoinInner")(l.mergeJoinInner(r))
+        building("mergeUnion")(l.mergeUnion(Seq((3L, "c")).toDS.groupSort(4)))
+        building("groupSortWith")(Seq((1L, 1)).toDS.groupSortWith(Seq((1L, 2)).toDS.groupSort()))
+        // listener events arrive in order: once the marker job is seen, so
+        // is every job started before it
+        building("marker")(sc.parallelize(Seq(1), 1).count())
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(groups.contains("marker"))
+        val started = groups.asScala.groupBy(identity).view.mapValues(_.size).toMap
+        assert(Seq("mergeJoinInner", "mergeUnion", "groupSortWith").map(g => g -> started.getOrElse(g, 0)) ===
+          Seq("mergeJoinInner" -> 0, "mergeUnion" -> 0, "groupSortWith" -> 0))
+      } finally sc.removeSparkListener(listener)
     }
   }
 
@@ -362,11 +456,10 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
       assertMultiset(got.toDS, Seq(("a", 1), ("a", 2), ("a", 3), ("b", 5), ("c", 7)))
     }
 
-    it("co-partitioned union is NARROW (0 exchanges in the merged plan)") {
+    it("co-partitioned union is NARROW: no exchange beyond the two layouts'") {
       val a = Seq(("a", 1), ("b", 5)).toDS().groupSort(2)
       val b = Seq(("a", 2)).toDS().groupSort(2)
-      val plan = a.mergeUnion(b).toDS.queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(plan).isEmpty, plan)
+      assert(planShape(a.mergeUnion(b).toDS) === ((2, 2)))
     }
 
     it("merges two DESCENDING layouts through the narrow path under the natural ordering") {
@@ -376,18 +469,19 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
       val a = Seq(("k", 1), ("k", 3), ("m", 2)).toDS().groupSort(2, reverse = true)
       val b = Seq(("k", 2), ("m", 9)).toDS().groupSort(2, reverse = true)
       val merged = a.mergeUnion(b)
-      assert("Exchange".r.findAllIn(merged.toDS.queryExecution.executedPlan.toString).isEmpty)
+      assert(planShape(merged.toDS) === ((2, 2)))
       assertGroupSorted(merged.toDS, Some(Ordering.Int.reverse))
       val vs = merged.mapStreamByKey(it => Iterator.single(it.mkString(","))).collect().toMap
       assert(vs("k") === "3,2,1" && vs("m") === "9,2")
     }
 
-    it("ascending and descending layouts do not zip: falls back to one shuffle") {
+    it("ascending and descending layouts: the other side is re-sorted, not re-shuffled") {
       val a = Seq(("k", 1), ("k", 3)).toDS().groupSort(2)
       val b = Seq(("k", 2)).toDS().groupSort(2, reverse = true)
       val merged = a.mergeUnion(b)
+      assert(planShape(merged.toDS)._1 === 2)
       assertMultiset(merged.toDS, Seq(("k", 1), ("k", 2), ("k", 3)))
-      // a's established ASC order wins in the re-layout
+      // a's established ASC order wins
       val vs = merged.mapStreamByKey(it => Iterator.single(it.mkString(","))).collect().toMap
       assert(vs("k") === "1,2,3")
     }
@@ -398,8 +492,9 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
       val a = Seq(("k", 1), ("k", 3)).toDS().groupSort(2, reverse = true)
       val b = Seq(("k", 2), ("m", 9)).toDS().groupSort(3, reverse = true)
       val merged = a.mergeUnion(b)
+      assert(planShape(merged.toDS) === ((3, 3)))
       assertMultiset(merged.toDS, Seq(("k", 1), ("k", 2), ("k", 3), ("m", 9)))
-      // per-key DESC order must survive the fallback re-layout
+      // per-key DESC order must survive the re-shuffled side
       val vs = merged.mapStreamByKey(it => Iterator.single(it.mkString(","))).collect().toMap
       assert(vs("k") === "3,2,1")
     }
@@ -424,11 +519,11 @@ class GroupSortedDatasetSpec extends AnyFunSpec with SparkSuite {
       import org.apache.spark.sql.functions.col
       val a = Seq((1L, 10L), (2L, 20L)).toDF("id", "score").as[(Long, Long)].groupSort(4)
       val b = Seq((1L, 11L), (3L, 30L)).toDF("id", "score").as[(Long, Long)].groupSort(4)
-      val u = a.mergeUnion(b) // co-partitioned: narrow zip, re-created Dataset
+      val u = a.mergeUnion(b)
       assert(u.toDS.columns.toSeq == Seq("id", "score"),
-        s"narrow mergeUnion must restore named columns, got ${u.toDS.columns.toSeq}")
+        s"mergeUnion must restore named columns, got ${u.toDS.columns.toSeq}")
       // downstream op that resolves the carried value sort by NAME — this
-      // threw AnalysisException when the narrow path left _1/_2 columns
+      // throws AnalysisException if the union leaves _1/_2 columns
       val c = Seq((1L, 5L)).toDF("id", "score").as[(Long, Long)].groupSort(7)
       val joined = u.mergeJoinInner(c).collect().toSet
       assert(joined == Set((1L, (10L, 5L)), (1L, (11L, 5L))))

@@ -52,7 +52,8 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val g = JavaGroupSortedDataset.groupSortByRange(rows.toDS(), 2, false, kString)
       assertGroupSorted(g.toDS(), Some(Ordering.Int))
       assertMultiset(g.toDS(), rows)
-      assert(!g.canNarrowJoinWith(gs(), natural)) // no co-partition proof from a range layout
+      val joined = g.mergeJoinInner(gs(), Encoders.tuple(jInt, jInt))
+      assertMultiset(joined, rows.flatMap { case (k, v) => rows.filter(_._1 == k).map(w => (k, (v, w._2))) })
     }
 
     it("mapStreamByKey streams each key's values in order") {
@@ -113,13 +114,12 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val left = gs(4)
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("c", "y"), ("d", "z")).toDS(), 4, kString)
-      assert(left.canNarrowJoinWith(right, natural))
       val f: JFunction2[JIterator[Int], JIterator[String], JIterator[String]] =
         (vs, ws) => {
           val w = ws.asScala.toList
           vs.asScala.flatMap(v => w.map(s => s"$v$s")).asJava
         }
-      val got = left.mergeJoin(right, f, natural, jString)
+      val got = left.mergeJoin(right, f, jString)
       // keys only on one side see an empty other-side iterator; here f emits
       // nothing for them (inner-style lambda)
       assertMultiset(got, Seq(("a", "1x"), ("a", "3x"), ("c", "5y")))
@@ -129,20 +129,19 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val left = JavaGroupSortedDataset.groupSort(rows.toDS(), kString) // no explicit count
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("c", "y")).toDS(), 4, kString)
-      assert(!left.canNarrowJoinWith(right, natural))
       val f: JFunction2[JIterator[Int], JIterator[String], JIterator[String]] =
         (vs, ws) => {
           val w = ws.asScala.toList
           vs.asScala.flatMap(v => w.map(s => s"$v$s")).asJava
         }
-      val got = left.mergeJoin(right, f, natural, jString)
+      val got = left.mergeJoin(right, f, jString)
       assertMultiset(got, Seq(("a", "1x"), ("a", "3x"), ("c", "5y")))
     }
 
     it("mergeUnion merges two co-partitioned layouts order-preservingly") {
       val other = JavaGroupSortedDataset.groupSort(
         Seq(("a", 2), ("c", 1)).toDS(), 4, kString)
-      val u = gs(4).mergeUnion(other, natural, JavaGroupSortedDataset.naturalOrder[Int]())
+      val u = gs(4).mergeUnion(other, JavaGroupSortedDataset.naturalOrder[Int]())
       assertGroupSorted(u.toDS(), Some(Ordering.Int))
       assertMultiset(u.toDS(), rows ++ Seq(("a", 2), ("c", 1)))
     }
@@ -151,7 +150,7 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val left = gs(4)
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("c", "y"), ("d", "z")).toDS(), 4, kString)
-      val got = left.mergeJoinInner(right, natural, Encoders.tuple(jInt, jString))
+      val got = left.mergeJoinInner(right, Encoders.tuple(jInt, jString))
       assertMultiset(got, Seq(("a", (1, "x")), ("a", (3, "x")), ("c", (5, "y"))))
     }
 
@@ -159,7 +158,7 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val left = gs(4)
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("d", "z")).toDS(), 4, kString)
-      val got = left.mergeJoinLeftOuter(right, natural, jInt, jString)
+      val got = left.mergeJoinLeftOuter(right, jInt, jString)
       assertMultiset(got, Seq(
         ("a", (1, "x")), ("a", (3, "x")),
         ("b", (1, null)), ("b", (10, null)), ("c", (5, null))))
@@ -171,7 +170,7 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
         Seq(("a", "l1"), ("a", "l2")).toDS(), 4, kString)
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("d", "z")).toDS(), 4, kString)
-      val got = left.mergeJoinRightOuter(right, natural, jString, jString)
+      val got = left.mergeJoinRightOuter(right, jString, jString)
       assertMultiset(got, Seq(
         ("a", ("l1", "x")), ("a", ("l2", "x")), ("d", (null, "z"))))
     }
@@ -182,8 +181,8 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("d", "z")).toDS(), 4, kString)
       val want = Seq(("a", ("l1", "x")), ("b", ("l2", null)), ("d", (null, "z")))
-      assertMultiset(left.mergeJoinOuter(right, false, natural, jString, jString), want)
-      assertMultiset(left.mergeJoinOuter(right, true, natural, jString, jString), want)
+      assertMultiset(left.mergeJoinOuter(right, false, jString, jString), want)
+      assertMultiset(left.mergeJoinOuter(right, true, jString, jString), want)
     }
 
     it("bufferLeft overloads on inner/left/right joins flip buffering, not results (reference GroupSorted.scala:81-94 parity)") {
@@ -192,14 +191,14 @@ class JavaApiSpec extends AnyFunSpec with SparkSuite {
       val right = JavaGroupSortedDataset.groupSort(
         Seq(("a", "x"), ("d", "z")).toDS(), 4, kString)
       val wantInner = Seq(("a", ("l1", "x")), ("a", ("l2", "x")))
-      assertMultiset(left.mergeJoinInner(right, true, natural, Encoders.tuple(jString, jString)), wantInner)
-      assertMultiset(left.mergeJoinInner(right, false, natural, Encoders.tuple(jString, jString)), wantInner)
+      assertMultiset(left.mergeJoinInner(right, true, Encoders.tuple(jString, jString)), wantInner)
+      assertMultiset(left.mergeJoinInner(right, false, Encoders.tuple(jString, jString)), wantInner)
       val wantLeft = wantInner :+ ("b", ("l3", null))
-      assertMultiset(left.mergeJoinLeftOuter(right, true, natural, jString, jString), wantLeft)
-      assertMultiset(left.mergeJoinLeftOuter(right, false, natural, jString, jString), wantLeft)
+      assertMultiset(left.mergeJoinLeftOuter(right, true, jString, jString), wantLeft)
+      assertMultiset(left.mergeJoinLeftOuter(right, false, jString, jString), wantLeft)
       val wantRight = wantInner :+ ("d", (null, "z"))
-      assertMultiset(left.mergeJoinRightOuter(right, true, natural, jString, jString), wantRight)
-      assertMultiset(left.mergeJoinRightOuter(right, false, natural, jString, jString), wantRight)
+      assertMultiset(left.mergeJoinRightOuter(right, true, jString, jString), wantRight)
+      assertMultiset(left.mergeJoinRightOuter(right, false, jString, jString), wantRight)
     }
 
     it("naturalOrder throws NullPointerException on null operands (reference NaturalComparator parity)") {
